@@ -2,12 +2,10 @@ package graft.operators
 
 import graft.PlanCapture.CheckpointOps
 import graft.functions.{CosineSim, L2Dist}
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import scala.collection.parallel.CollectionConverters._
 
 /** IVF-PQ: product-quantized residuals on top of the frozen IVF coarse
   * quantizer ([[IvfIndex]]) — the memory-bounded ANN form actually deployed
@@ -45,9 +43,17 @@ object PqIndex {
     * codebooks spend their 2^nbits entries on the (much tighter) residual
     * distribution. The fit trains on the same deterministic hash-mod
     * sample rule as [[IvfIndex.build]] (a quantizer needs ~100·2^nbits
-    * points per subspace, not the corpus); each subspace fits with its own
-    * derived seed so codebooks differ across subspaces but reproduce
-    * exactly across runs. */
+    * points per subspace, not the corpus).
+    *
+    * All m codebooks train TOGETHER in one batched Lloyd kernel
+    * ([[lloyd]]): one bounded init-sample job seeds every subspace with
+    * k-means++ (per-subspace seed `seed + j`, so codebooks differ across
+    * subspaces but reproduce exactly across runs), then each iteration is
+    * ONE job whose per-partition partials carry every subspace's
+    * (sum, count) per code — m·2^nbits·(d/m + 1) doubles, 544 at the
+    * registered m=32/nbits=4. The fit costs at most `LloydMaxIter` + 3
+    * jobs whatever m is: two for the checkpoint, one for the init sample,
+    * one per iteration, plus the corpus count() without `nHint`. */
   def fitCodebooks(vectors: DataFrame, centroids: DataFrame, idCol: String,
                    vecCol: String, m: Int, nbits: Int, seed: Long = 42L,
                    maxTrain: Long = 200000L, nHint: Long = 0L): DataFrame = {
@@ -60,8 +66,6 @@ object PqIndex {
     require(nbits >= 1 && nbits <= 8,
       s"fitCodebooks: nbits must be in [1,8] (codes are stored BIASED by -128 " +
         s"in tinyint — see encode — so the full 8-bit range fits one byte), got $nbits")
-    val ds = d / m
-    val k = 1 << nbits
     val n = if (nHint > 0) nHint else vectors.count()
     val train =
       if (n <= maxTrain) vectors
@@ -69,39 +73,167 @@ object PqIndex {
       // the training cap at corpus scale
       else Sampling.deterministicSamplePpm(vectors, idCol,
         math.min(1000000, math.max(1, math.ceil(maxTrain * 1e6 / n).toInt)), seed)
-    // one residual pass feeds all m subspace fits. Repartitioned to
+    // one residual pass feeds every Lloyd iteration. Repartitioned to
     // training-sample-sized parallelism BEFORE the checkpoint (see
-    // IvfIndex.trainPartitions): the m sequential k-means fits each run
-    // 20+ jobs over this frame, and corpus-inherited partitioning would
-    // multiply every one of them by near-empty tasks (repartition, not
-    // coalesce — coalesce would collapse the sampling scan itself).
+    // IvfIndex.trainPartitions): corpus-inherited partitioning would
+    // multiply every iteration's job by near-empty tasks (repartition,
+    // not coalesce — coalesce would collapse the sampling scan itself).
     val resid = withResidual(train, cents, vecCol).select(col("__resid"))
       .repartition(IvfIndex.trainPartitions(math.min(n, maxTrain)))
       .auditedCheckpoint()
-    // the m subspace fits are INDEPENDENT (disjoint slices, per-subspace
-    // seeds) — submit them as concurrent Spark jobs instead of a
-    // sequential driver loop: each MLlib fit carries ~1+ s of fixed
-    // overhead (k-means|| init rounds, per-iteration job launch), and at
-    // m=32 the sequential form made this THE dominant cold-store anchor
-    // cost (45 s of qe60's 48 s fit bill, BASELINE.md r14). Results land
-    // in a j-indexed array, so output order — and the persisted artifact —
-    // is byte-identical to the sequential form.
-    val perSub = new Array[Seq[(Int, Int, Seq[Double])]](m)
-    val pv = (0 until m).toVector.par
-    val fitPool = new java.util.concurrent.ForkJoinPool(
-      math.min(m, math.max(1, spark.sparkContext.defaultParallelism / 2)))
-    pv.tasksupport =
-      new scala.collection.parallel.ForkJoinTaskSupport(fitPool)
-    try pv.foreach { j =>
-      val sub = resid.select(
-        array_to_vector(slice(col("__resid"), j * ds + 1, ds)).as("__v"))
-      val model = new KMeans().setK(k).setSeed(seed + j).setMaxIter(20)
-        .setFeaturesCol("__v").setPredictionCol("code").fit(sub)
-      perSub(j) = model.clusterCenters.zipWithIndex.map { case (c, i) =>
-        (j, i, c.toArray.toSeq)
-      }.toSeq
-    } finally fitPool.shutdown()
-    perSub.toSeq.flatten.toDF("sub", "code", "codeword")
+    val books = lloyd(resid.queryExecution.toRdd.map(_.getArray(0).toDoubleArray()),
+      math.min(n, maxTrain), m, d / m, 1 << nbits, seed)
+    books.indices.flatMap { j =>
+      books(j).indices.map(c => (j, c, books(j)(c).toSeq))
+    }.toDF("sub", "code", "codeword")
+  }
+
+  /** Lloyd iteration cap and convergence tolerance of [[fitCodebooks]]
+    * (MLlib's KMeans defaults): iteration stops once no codeword moves
+    * more than `LloydTol` (Euclidean), or after `LloydMaxIter` passes. */
+  private[operators] val LloydMaxIter = 20
+  private val LloydTol = 1e-4
+
+  /** Batched Lloyd over `m` subspaces of width `ds`: books(j)(c) is
+    * subspace j's codeword c (k of them per subspace).
+    *
+    * Init: one job draws a bounded Bernoulli sample of the `trainRows`
+    * training rows (seeded per partition, so it is deterministic for a
+    * deterministic partitioning); every subspace then seeds k-means++
+    * from its slice of that sample on the driver.
+    *
+    * Iterations: one job each. Every row is assigned, per subspace, to the
+    * codeword at minimum SQUARED L2 with ties to the LOWER code — the rule
+    * [[encode]] applies (`array_position` of the first minimum), so fit
+    * and apply agree. Per-partition partials are summed on the driver in
+    * partition order, not in task-completion order (as a tree or fold
+    * reduce would): floating-point sums, and with them the codebooks and
+    * the persisted artifact, stay bit-identical across runs. An empty
+    * cluster keeps its previous codeword; a subspace with fewer distinct
+    * points than k ends with duplicate codewords, which [[encode]]
+    * resolves to the lower code. */
+  private def lloyd(rows: RDD[Array[Double]], trainRows: Long, m: Int, ds: Int,
+                    k: Int, seed: Long): Array[Array[Array[Double]]] = {
+    // at most max(4096, 32k) expected rows — the whole training set at
+    // the registered scales
+    val sample = rows.sample(withReplacement = false,
+      math.min(1.0, math.max(4096, 32 * k).toDouble / trainRows), seed).collect()
+    require(sample.nonEmpty,
+      "fitCodebooks: empty training sample — no residual rows to fit codebooks on")
+    var books = Array.tabulate(m)(j => kMeansPlusPlus(sample, j * ds, ds, k, seed + j))
+    val stride = ds + 1 // per-code slot: ds sums, then the count
+    var iter = 0
+    var moved = Double.PositiveInfinity
+    while (iter < LloydMaxIter && moved > LloydTol) {
+      val cur = books
+      val total = new Array[Double](m * k * stride)
+      rows.mapPartitions { it =>
+        val acc = new Array[Double](m * k * stride)
+        it.foreach { v =>
+          var j = 0
+          while (j < m) {
+            val c = nearest(cur(j), v, j * ds)
+            val base = (j * k + c) * stride
+            var t = 0
+            while (t < ds) { acc(base + t) += v(j * ds + t); t += 1 }
+            acc(base + ds) += 1.0
+            j += 1
+          }
+        }
+        Iterator.single(acc)
+      }.collect().foreach { acc =>
+        var i = 0
+        while (i < total.length) { total(i) += acc(i); i += 1 }
+      }
+      moved = 0.0
+      books = Array.tabulate(m, k) { (j, c) =>
+        val base = (j * k + c) * stride
+        val cnt = total(base + ds)
+        if (cnt == 0) cur(j)(c)
+        else {
+          val w = Array.tabulate(ds)(t => total(base + t) / cnt)
+          moved = math.max(moved, math.sqrt(sqDist(cur(j)(c), w, 0)))
+          w
+        }
+      }
+      iter += 1
+    }
+    // the iteration count sets the fit's cost (one job each): report
+    // it next to the artifact ledger line
+    System.err.println(
+      f"[pq] lloyd m=$m k=$k init_sample=${sample.length} iterations=$iter max_move=$moved%.1e")
+    books
+  }
+
+  /** k-means++ seeding of one subspace (slice [off, off+ds) of each
+    * sample row), greedy form: each step draws 2 + ⌊ln k⌋ D²-weighted
+    * candidates and keeps the one that lowers the potential most. Once
+    * every distinct point is a codeword (the potential is 0), the
+    * remaining codewords repeat the first. */
+  private def kMeansPlusPlus(sample: Array[Array[Double]], off: Int, ds: Int,
+                             k: Int, seed: Long): Array[Array[Double]] = {
+    val rnd = new java.util.Random(seed)
+    val n = sample.length
+    def at(i: Int): Array[Double] = java.util.Arrays.copyOfRange(sample(i), off, off + ds)
+    val books = new Array[Array[Double]](k)
+    books(0) = at(rnd.nextInt(n))
+    val d2 = Array.tabulate(n)(i => sqDist(books(0), sample(i), off))
+    val trials = 2 + math.log(k).toInt
+    var c = 1
+    while (c < k) {
+      val pot = d2.sum
+      if (pot <= 0) books(c) = books(0)
+      else {
+        var best: (Array[Double], Array[Double], Double) = null
+        var t = 0
+        while (t < trials) {
+          // first positive-weight point whose running D² sum passes r (the
+          // last positive one if rounding leaves the sum short of r), so a
+          // candidate is never a point that is already a codeword
+          val r = rnd.nextDouble() * pot
+          var i = 0
+          var pick = -1
+          var last = 0
+          var cum = 0.0
+          while (i < n && pick < 0) {
+            if (d2(i) > 0) { cum += d2(i); last = i; if (cum > r) pick = i }
+            i += 1
+          }
+          val cand = at(if (pick < 0) last else pick)
+          val nd = Array.tabulate(n)(p => math.min(d2(p), sqDist(cand, sample(p), off)))
+          val np = nd.sum
+          if (best == null || np < best._3) best = (cand, nd, np)
+          t += 1
+        }
+        books(c) = best._1
+        System.arraycopy(best._2, 0, d2, 0, n)
+      }
+      c += 1
+    }
+    books
+  }
+
+  /** Index of the codeword nearest to v[off, off+ds) by squared L2; ties
+    * go to the LOWER code. */
+  private def nearest(book: Array[Array[Double]], v: Array[Double], off: Int): Int = {
+    var best = 0
+    var bestD = Double.PositiveInfinity
+    var c = 0
+    while (c < book.length) {
+      val dd = sqDist(book(c), v, off)
+      if (dd < bestD) { bestD = dd; best = c }
+      c += 1
+    }
+    best
+  }
+
+  /** Squared L2 between `w` and v[off, off + w.length), accumulated in
+    * index order like [[L2Dist]]. */
+  private def sqDist(w: Array[Double], v: Array[Double], off: Int): Double = {
+    var s = 0.0
+    var t = 0
+    while (t < w.length) { val e = v(off + t) - w(t); s += e * e; t += 1 }
+    s
   }
 
   /** PERSISTED codebook artifact — first call per (input fingerprint,

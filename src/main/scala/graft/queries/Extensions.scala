@@ -1598,7 +1598,7 @@ object Extensions {
     // SQL. Floors are the measured WORST across the driver SFs
     // (sf0.001/0.01/0.1, CertProbe) minus margin — the certificate must
     // hold wherever the driver or judge runs the compare: IVF/frozen-IVF
-    // 0.85 (measured 0.92-1.0), IVF-PQ 0.8 (measured 0.86-0.98),
+    // 0.85 (measured 0.92-1.0), IVF-PQ 0.8 (measured 0.86-1.0),
     // multi-table SRP 0.5 (measured 0.58-0.68 — wide-angle SRP economics
     // on near-orthogonal synthetic embeddings; the production rungs are
     // the IVF forms). Sharper per-SF bands stay in SimilaritySpec.

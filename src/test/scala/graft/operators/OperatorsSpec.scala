@@ -746,6 +746,113 @@ class SimilaritySpec extends SparkTestBase {
     } finally spark.conf.unset("spark.graft.artifacts.dir")
   }
 
+  /** Training residuals of a PQ fit at centroids `cents`, recomputed
+    * driver-side: vec_id -> v − centroid[cell]. */
+  private def residuals(vecs: org.apache.spark.sql.DataFrame,
+                        cents: org.apache.spark.sql.DataFrame): Map[Long, Array[Double]] = {
+    val centMap = cents.collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).toMap
+    IvfIndex.assignInline(vecs.select("vec_id", "embedding"), cents, "embedding")
+      .collect().map { r =>
+        r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toArray.zip(centMap(r.getInt(2)))
+          .map { case (v, c) => v - c }
+      }.toMap
+  }
+
+  private def sqDist(a: Array[Double], b: Array[Double]): Double =
+    a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
+
+  test("IVF-PQ fit: all m codebooks train in at most LloydMaxIter + 4 Spark jobs") {
+    // one k-means fit per subspace costs ~25 jobs EACH (782 at m=32 here);
+    // the batched Lloyd kernel costs checkpoint + init sample + one job
+    // per iteration, whatever m is. nHint as every registered caller
+    // passes it (footer row count), so no corpus count() job rides along
+    val emb = Engine.Tables(spark, Sf0001).embeddings
+    val nH = Engine.parquetRowCount(spark, s"$Sf0001/embeddings.parquet")
+    val (_, cents) = IvfIndex.build(emb, "vec_id", "embedding", 8, nHint = nH)
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("-"))
+    }
+    // sentinel jobs bracket the fit: the listener bus is asynchronous but
+    // ordered, so every fit job's start lands between the two sentinels
+    def sentinel(name: String): Unit = {
+      sc.setJobGroup(name, name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sentinel("pq-jobs-begin")
+      PqIndex.fitCodebooks(emb, cents, "vec_id", "embedding", m = 32, nbits = 4,
+        nHint = nH)
+      sentinel("pq-jobs-end")
+      val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+      while (!seen.lastOption.contains("pq-jobs-end")) {
+        val g = groups.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+        assert(g != null, s"listener never saw the end sentinel (saw $seen)")
+        seen += g
+      }
+      val fitJobs = seen.size - seen.indexOf("pq-jobs-begin") - 2
+      assert(fitJobs >= 1 && fitJobs <= PqIndex.LloydMaxIter + 4,
+        s"PQ codebook fit launched $fitJobs Spark jobs (bound ${PqIndex.LloydMaxIter + 4})")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("IVF-PQ fit: training quantization error within 2% of an MLlib k-means reference") {
+    // test-only reference: MLlib KMeans (k-means|| init, 20 iterations) on
+    // the same per-subspace residual slices, same per-subspace seeds
+    import org.apache.spark.ml.clustering.KMeans
+    import org.apache.spark.ml.linalg.Vectors
+    val emb = Engine.Tables(spark, Sf0001).embeddings
+    val (_, cents) = IvfIndex.build(emb, "vec_id", "embedding", 8)
+    val resid = residuals(emb, cents).values.toArray
+    Seq((32, 4), (8, 8)).foreach { case (m, nbits) =>
+      val ds = resid.head.length / m
+      val books = PqIndex.fitCodebooks(emb, cents, "vec_id", "embedding", m = m, nbits = nbits)
+        .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toArray)
+        .groupBy(_._1._1).map { case (j, cw) => j -> cw.map(_._2) }
+      def err(j: Int, centers: Array[Array[Double]]): Double =
+        resid.map(r => centers.map(c => sqDist(r.slice(j * ds, (j + 1) * ds), c)).min).sum
+      val (got, ref) = (0 until m).map { j =>
+        val slices = resid.map(r => Tuple1(Vectors.dense(r.slice(j * ds, (j + 1) * ds))))
+        val model = new KMeans().setK(1 << nbits).setSeed(42L + j).setMaxIter(20)
+          .fit(spark.createDataFrame(slices.toSeq).toDF("features"))
+        (err(j, books(j)), err(j, model.clusterCenters.map(_.toArray)))
+      }.reduce((a, b) => (a._1 + b._1, a._2 + b._2))
+      assert(got <= 1.02 * ref,
+        s"m=$m nbits=$nbits: batched-Lloyd training error $got above 1.02x MLlib's $ref")
+    }
+  }
+
+  test("IVF-PQ fit: fewer distinct sub-vectors than 2^nbits encode exactly; " +
+    "an empty training sample fails naming the contract") {
+    val emb = Engine.Tables(spark, Sf0001).embeddings
+    val (_, cents) = IvfIndex.build(emb, "vec_id", "embedding", 8)
+    val ten = emb.filter(col("vec_id") < 10)
+    val books = PqIndex.fitCodebooks(ten, cents, "vec_id", "embedding", m = 32, nbits = 4)
+    assert(books.count() == 32L * 16L, "every subspace keeps 2^nbits codewords")
+    val bookMap = books.collect()
+      .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toArray).toMap
+    val resid = residuals(ten, cents)
+    val enc = PqIndex.encode(ten.select("vec_id", "embedding"), cents, books, "embedding")
+      .collect()
+    assert(enc.length == 10)
+    enc.foreach { r =>
+      val codes = r.getSeq[Byte](2).map(_.toInt + 128)
+      assert(codes.forall(c => c >= 0 && c < 16), s"unbiased code out of [0,16): $codes")
+      val decoded = codes.zipWithIndex.flatMap { case (c, j) => bookMap((j, c)) }.toArray
+      assert(sqDist(decoded, resid(r.getLong(0))) <= 1e-18,
+        s"vec ${r.getLong(0)}: a training sub-vector is not one of its subspace's codewords")
+    }
+    val e = intercept[IllegalArgumentException] {
+      PqIndex.fitCodebooks(emb.filter(lit(false)), cents, "vec_id", "embedding", m = 32, nbits = 4)
+    }
+    assert(e.getMessage.contains("fitCodebooks") && e.getMessage.contains("empty training sample"),
+      e.getMessage)
+  }
+
 }
 
 class TextAnalysisSpec extends SparkTestBase {

@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
 object CertProbe {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = graft.Engine.session("local[16]", 16)
+    val cores = Runtime.getRuntime.availableProcessors
+    val spark = graft.Engine.session(s"local[$cores]", cores)
     import graft.operators._
     val emb = graft.Engine.Tables(spark, d).embeddings
     val docs = graft.Engine.Tables(spark, d).documents
@@ -35,7 +36,26 @@ object CertProbe {
       "vec_id", "embedding", nlist = 8, m = 32, nbits = 4, nHint = nH)
     val index = PqIndex.persistedEncoded(emb, s"$d/embeddings.parquet", cents,
       books, "vec_id", "embedding", nlist = 8, m = 32, nbits = 4)
-    println(s"[cert $d] pq recall    = ${rec(PqIndex.topKEncoded(emb, index, cents, books, q, "vec_id", "embedding", 5, nprobe = 6, refine = 4))}")
+    // training distortion: mean squared residual reconstruction error per
+    // vector over the training set (the whole table below maxTrain rows),
+    // beside the centroid-only error the codebooks must undercut
+    val centMap = cents.collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).toMap
+    val bookArr = books.collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+      .groupBy(_._1).toArray.sortBy(_._1).map(_._2.sortBy(_._2).map(_._3))
+    val resid = IvfIndex.assignInline(emb.select("vec_id", "embedding"), cents, "embedding")
+      .collect().map { r =>
+        r.getSeq[Float](1).map(_.toDouble).toArray.zip(centMap(r.getInt(2)))
+          .map { case (v, c) => v - c }
+      }
+    def sq(a: Array[Double], off: Int, w: Array[Double]): Double =
+      w.indices.map(t => (a(off + t) - w(t)) * (a(off + t) - w(t))).sum
+    val ds = resid.head.length / bookArr.length
+    val distortion = resid.map(r => bookArr.indices.map(j =>
+      bookArr(j).map(sq(r, j * ds, _)).min).sum).sum / resid.length
+    val base = resid.map(r => r.map(x => x * x).sum).sum / resid.length
+    println(f"[cert $d] pq recall    = ${rec(PqIndex.topKEncoded(emb, index, cents, books, q, "vec_id", "embedding", 5, nprobe = 6, refine = 4))}" +
+      f"  distortion = $distortion%.6f (centroid-only $base%.6f)")
 
     // embedding near-dup family
     val exPairs = Dedup.embeddingNearDups(emb, "vec_id", "embedding", 0.45)
